@@ -8,10 +8,11 @@ checkpoint/resume), so this design is Spark-native:
   marks stage completion — the coarse checkpoint);
 * a **lineage table** per stage records one row per work partition (we key
   by ``repo`` — the ingest range-partitioning key): input docs, emitted
-  triples, parse errors, sha-invariant violations, wall time;
-* resume = skip stages whose `_SUCCESS` exists; within the extraction
-  stage, an **anti-join on completed repos** (from the lineage table)
-  restricts re-work to unfinished partitions.
+  triples, parse errors, sha-invariant violations;
+* resume = skip stages whose `_SUCCESS` exists (:func:`stage_complete`);
+  with ``run_pipeline(extract_buckets=B)`` extraction runs as B
+  ``raw_triples/bucket=<b>`` jobs, each with its own `_SUCCESS`, so a
+  crashed run re-does only the unfinished bucket directories.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def sha_invariant_violations(docs: DataFrame) -> DataFrame:
@@ -104,14 +105,6 @@ def triple_precision_recall(got: DataFrame, expected: DataFrame) -> dict:
 
 def stage_complete(stage_dir: str) -> bool:
     return os.path.exists(os.path.join(stage_dir, "_SUCCESS"))
-
-
-def completed_repos(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
-    """Repos already finished in a previous (partial) run — the anti-join
-    side of resume. None if no lineage exists yet."""
-    if not stage_complete(lineage_dir):
-        return None
-    return spark.read.parquet(lineage_dir).select("repo").distinct()
 
 
 class StageTimer:

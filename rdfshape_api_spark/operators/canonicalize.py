@@ -15,10 +15,10 @@ distributed-friendly rules:
   (done at parse), canonical ``xsd:decimal``/``xsd:integer`` forms (strip
   leading '+', strip trailing fraction zeros, drop trailing '.', "-0"→"0").
 * **Dedup** — exact duplicate elimination of canonical triples. The hot-key
-  risk (popular objects like ``ex:hub``, ``rdf:type``) is absorbed by a
-  two-phase salted aggregation: partial distinct on (key, salt) then final
-  distinct — map-side combine keeps the skewed key from landing on one
-  reducer. AQE skew handling stays on as the backstop.
+  risk (popular objects like ``ex:hub``, ``rdf:type``) is absorbed by
+  Spark's two-phase distinct: map-side partial aggregation collapses
+  duplicates before the shuffle, so the skewed key never reaches one
+  reducer in full. AQE skew handling stays on as the backstop.
 * **Canonical store** — parquet partitioned by predicate (north rule) with
   a ``bucket = pmod(xxhash64(subj), k)`` sub-key so hot predicates
   (``rdf:type``) split into k files instead of one giant partition
@@ -87,38 +87,21 @@ def normalize_literals(df: DataFrame) -> DataFrame:
     return df.withColumn("obj_value", F.when(is_num, canon).otherwise(v))
 
 
-def expand_prefixed(df: DataFrame) -> DataFrame:
-    """No-op by contract: parsers already emit absolute IRIs (prefix
-    expansion happens at parse, using each document's own prefix map), so
-    cross-document prefix aliasing (``ex:`` vs ``sensor:`` for one
-    namespace) is already resolved. Kept as an explicit stage marker."""
-    return df
-
-
 def canonicalize(df: DataFrame) -> DataFrame:
     """skolemize → normalize literals (the once-only canonical form)."""
     return normalize_literals(skolemize(df))
 
 
-def dedup_triples(
-    df: DataFrame, scope_doc: bool = False, salt_buckets: int = 0
-) -> DataFrame:
+def dedup_triples(df: DataFrame, scope_doc: bool = False) -> DataFrame:
     """Distinct canonical triples (graph-merge semantics,
     MergedModels.scala:182-191: union of models unifies identical triples).
 
     ``scope_doc=True`` keeps per-document multiplicity (one graph per doc).
-    ``salt_buckets>0`` forces the two-phase salted distinct; with 0 we rely
-    on Spark's partial-aggregation + AQE, which is already two-phase for
-    plain ``distinct`` — the explicit salt is for the *join/agg-by-entity*
-    cases where the grouping key alone is skewed.
+    Spark's partial aggregation + AQE already make plain ``distinct``
+    two-phase; explicit salting (:func:`entity_degree`) is only for the
+    agg-by-entity cases where the grouping key alone is skewed.
     """
     key = (["doc_sha256"] if scope_doc else []) + TRIPLE_KEY
-    if salt_buckets > 0:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in TRIPLE_KEY]), F.lit(salt_buckets))
-        )
-        partial = salted.dropDuplicates(key + ["_salt"]).drop("_salt")
-        return partial.dropDuplicates(key)
     return df.dropDuplicates(key)
 
 
@@ -322,17 +305,18 @@ def write_canonical_store(
     df: DataFrame,
     path: str,
     subj_buckets: int = 16,
-    mode: str = "overwrite",
     dedup: bool = False,
-    scope_doc: bool = True,
-    layout_partitions: int | None = 512,
 ) -> None:
     """Write the canonical triple store: parquet partitioned by predicate
     (north rule), sub-bucketed by subject hash so hot predicates split.
 
     The pre-write ``repartition(pred_part, bucket)`` lines file boundaries
-    up with partition directories (one shuffle, no small-files explosion);
-    readers filtering on predicate get directory-level partition pruning,
+    up with partition directories (one shuffle, no small-files explosion):
+    each layout key hashes to exactly one reducer, so every
+    ``pred_part=/bucket=`` directory gets exactly one file.  The shuffle
+    takes no partition count — AQE coalesces it to the data's size, and
+    coalescing merges whole reducers, so the one-file invariant holds.
+    Readers filtering on predicate get directory-level partition pruning,
     and the 2-col projection prunes parquet columns.
 
     ``dedup=True`` fuses exact-duplicate elimination INTO the layout
@@ -341,7 +325,8 @@ def write_canonical_store(
     aggregation's required distribution and Catalyst elides the second
     exchange — one shuffle total instead of dedup-shuffle + layout-shuffle
     (verified: executedPlan has a single Exchange), with map-side partial
-    aggregation absorbing duplicates before the wire.
+    aggregation absorbing duplicates before the wire.  The dedup key
+    includes ``doc_sha256`` when present (one graph per document).
     """
     # pred_part via a BROADCAST DICTIONARY join, not a per-row expression:
     # distinct predicates are few (10²-10⁴ even at web scale) while rows are
@@ -356,19 +341,11 @@ def write_canonical_store(
     out = df.join(pred_map, "pred").withColumn(
         "bucket", F.pmod(F.xxhash64("subj"), F.lit(subj_buckets))
     )
-    out = out.select(*df.columns, "pred_part", "bucket")
-    # More layout partitions than (pred × bucket) keys: hashing ~100 keys
-    # into the session's 32-64 shuffle partitions collides 2-3 hot keys
-    # onto one reducer and the straggler pins the stage wall at high
-    # parallelism — with ≥ keys partitions, each (pred_part, bucket) group
-    # is its own task (still 1 file per directory), and per-task hash-agg
-    # maps shrink accordingly.
-    if layout_partitions:
-        out = out.repartition(layout_partitions, "pred_part", "bucket")
-    else:
-        out = out.repartition("pred_part", "bucket")
+    out = out.select(*df.columns, "pred_part", "bucket").repartition(
+        "pred_part", "bucket"
+    )
     if dedup:
-        key = (["doc_sha256"] if scope_doc and "doc_sha256" in df.columns else []) + [
+        key = (["doc_sha256"] if "doc_sha256" in df.columns else []) + [
             c for c in TRIPLE_KEY if c in df.columns
         ]
         extras = [c for c in df.columns if c not in key]
@@ -378,11 +355,7 @@ def write_canonical_store(
             out = out.drop("_n")
         # restore the writer-side column order (partition cols last)
         out = out.select(*[c for c in df.columns], "pred_part", "bucket")
-    (
-        out.write.mode(mode)
-        .partitionBy("pred_part", "bucket")
-        .parquet(path)
-    )
+    out.write.mode("overwrite").partitionBy("pred_part", "bucket").parquet(path)
 
 
 def read_canonical_store(spark, path: str) -> DataFrame:

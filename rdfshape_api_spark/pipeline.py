@@ -81,7 +81,6 @@ def run_pipeline(
     shacl_schema: str | None = None,
     repartition_by_repo: int | None = None,
     resume: bool = True,
-    store_subj_buckets: int = 16,
     golden_triples: str | None = None,
     extract_buckets: int = 0,
     full_lineage: bool = False,
@@ -180,9 +179,7 @@ def run_pipeline(
             if not canon.filter(F.col("pred") == OWL_SAMEAS).isEmpty():
                 canon = link_entities(canon)
             # dedup is fused into the store's layout shuffle (one exchange)
-            write_canonical_store(
-                canon, store_dir, subj_buckets=store_subj_buckets, dedup=True
-            )
+            write_canonical_store(canon, store_dir, dedup=True)
     triples = spark.read.parquet(store_dir).select(*TRIPLE_COLUMNS)
 
     # -- stage 3: validation (all schemas in ONE pass over the store) --------

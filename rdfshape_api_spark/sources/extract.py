@@ -16,9 +16,10 @@ Reference semantics: ``RDFAsJenaModel.fromChars(input, format, base)``
   ``unionByName``.
 
 Scale notes (100 TB): the docs scan prunes to (repo, path, commit, lang,
-content) only; format dispatch is a partition-local filter, no shuffle; the
-only shuffle in extraction is the optional ``repartition_by_range('repo')``
-on ingest (north rule) which also evens out per-file document skew.
+content) only; format dispatch is a partition-local filter, so extraction
+itself has no shuffle.  ``run_pipeline(repartition_by_repo=n)`` range-
+partitions the docs by ``(repo, path)`` before extraction (north rule),
+which also evens out per-file document skew.
 """
 
 from __future__ import annotations
@@ -159,34 +160,23 @@ def extract_python_formats(docs: DataFrame) -> DataFrame:
     return narrow.mapInPandas(_parse_batch, schema=RAW_TRIPLE_SCHEMA)
 
 
-def extract_triples_raw(
-    docs: DataFrame, repartition_by_repo: int | None = None
-) -> DataFrame:
-    """Full extraction with error channel: dispatch by ``lang`` column.
-
-    ``repartition_by_repo`` applies the north-rule
-    ``repartitionByRange('repo')`` on ingest — use on real clusters so
-    downstream per-repo work co-locates; skip for tiny local tests.
-    """
+def extract_triples_raw(docs: DataFrame) -> DataFrame:
+    """Full extraction with error channel: dispatch by ``lang`` column."""
     docs = with_doc_sha(docs)
-    if repartition_by_repo:
-        docs = docs.repartitionByRange(repartition_by_repo, "repo", "path")
     lang = F.lower(F.col("lang"))
     nt = extract_ntriples_columnar(docs.filter(lang.isin(*NT_LANGS)))
     py = extract_python_formats(docs.filter(~lang.isin(*NT_LANGS)))
     return nt.unionByName(py)
 
 
-def extract_triples(
-    docs: DataFrame, repartition_by_repo: int | None = None
-) -> DataFrame:
+def extract_triples(docs: DataFrame) -> DataFrame:
     """Extraction → good triples only (canonical columns, no error rows).
 
     Compose with :func:`extract_errors` for the error channel, or use
     :func:`extract_triples_raw` for both in one pass (cache it if you need
     both — one scan, two consumers).
     """
-    raw = extract_triples_raw(docs, repartition_by_repo)
+    raw = extract_triples_raw(docs)
     return raw.filter(F.col("error").isNull()).select(*TRIPLE_COLUMNS)
 
 

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 
 
@@ -28,3 +31,17 @@ def triples_001(spark, fixtures_001):
     t = dedup_triples(canonicalize(extract_triples(docs)), scope_doc=True).persist()
     t.count()
     return t
+
+
+@pytest.fixture
+def assert_one_file_per_layout_dir():
+    """Check the canonical store's layout invariant: every
+    ``pred_part=/bucket=`` directory holds exactly one parquet file."""
+
+    def check(store_dir: str) -> None:
+        dirs = glob.glob(os.path.join(store_dir, "pred_part=*", "bucket=*"))
+        assert dirs, f"no layout directories under {store_dir}"
+        counts = {d: len(glob.glob(os.path.join(d, "*.parquet"))) for d in dirs}
+        assert set(counts.values()) == {1}, {d: n for d, n in counts.items() if n != 1}
+
+    return check

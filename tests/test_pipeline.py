@@ -8,7 +8,9 @@ from rdfshape_api_spark.fixtures.generator import SHACL_SENSOR, SHAPEMAP_QUERY, 
 from rdfshape_api_spark.pipeline import run_pipeline
 
 
-def test_pipeline_end_to_end_and_resume(spark, fixtures_001, tmp_path):
+def test_pipeline_end_to_end_and_resume(
+    spark, fixtures_001, tmp_path, assert_one_file_per_layout_dir
+):
     docs = spark.read.parquet(fixtures_001["docs"])
     out = str(tmp_path / "run1")
     m = run_pipeline(
@@ -29,6 +31,7 @@ def test_pipeline_end_to_end_and_resume(spark, fixtures_001, tmp_path):
     # store is predicate-partitioned
     parts = [p for p in os.listdir(os.path.join(out, "triple_store")) if p.startswith("pred_part=")]
     assert len(parts) == 6  # rdf:type + 5 sensor predicates
+    assert_one_file_per_layout_dir(os.path.join(out, "triple_store"))
 
     # resume: stages with _SUCCESS are skipped → no stage timers re-recorded
     m2 = run_pipeline(
