@@ -251,7 +251,7 @@ def _q_validate_shacl(spark, sf_dir):
 
 
 def _q_w3c_sample(spark, sf_dir):
-    """W3C ShEx/SHACL conformance sample: ~93 cases transcribed from the
+    """W3C ShEx/SHACL conformance sample: 108 cases transcribed from the
     official shexTest / data-shapes manifests (fixtures/w3c_sample.py),
     validated in ONE validate_batch pass over the unioned corpus.
     sf-independent by design — the corpus IS the suite sample.  The

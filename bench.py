@@ -116,7 +116,7 @@ def _prev_bench_queries(sf: str | float) -> tuple[dict, int | None]:
             if not m:
                 continue
             inner = json.loads(m.group(0))
-            if str(inner.get("sf")) != str(sf):
+            if float(inner.get("sf")) != float(sf):
                 continue  # walls only comparable at the same scale factor
             if inner.get("queries"):
                 walls = inner["queries"]

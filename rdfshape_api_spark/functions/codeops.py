@@ -27,8 +27,9 @@ striding.
   Σ df(fp)² over fingerprints, never files².  ``max_df`` drops
   boilerplate fingerprints (license headers, prefix declarations shared
   by every file in the corpus) from the JOIN side only — set sizes keep
-  them, so Jaccard loses only the uninformative hot mass.  Same guard
-  role as ``max_bucket``/``max_df`` in functions/dedup.py.
+  them, so Jaccard loses only the uninformative hot mass.  The join,
+  the guard and the Jaccard step are the shared ones in functions/dedup.py
+  (``blocked_pairs``, ``jaccard_pairs``).
 * Hashes are the portable md5-prefix 60-bit ints used across this
   package (``CAST('0x'||substr(md5(x),1,15) AS BIGINT)`` in DuckDB ↔
   ``conv(substring(md5(x),1,15),16,10)`` in Spark), so every operator
@@ -38,6 +39,12 @@ striding.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from rdfshape_api_spark.functions.dedup import (
+    blocked_pairs,
+    drop_hot_blocks,
+    jaccard_pairs,
+)
 
 
 def _h64(s: Column) -> Column:
@@ -137,52 +144,20 @@ def winnow_near_dup_pairs(
       winnow sketches through the MinHash/LSH path (functions/dedup.py)
       instead of joining raw fingerprints.
     """
-    file_id = F.concat_ws(":", F.col("repo"), F.col("path")).alias("file_id")
+    file_id = F.concat_ws(":", F.col("repo"), F.col("path")).alias("file")
     sets = winnow_fingerprint_sets(docs, k=k, w=w, content_col=content_col)
     sets = sets.select("repo", file_id, "fingerprints", "n_fp")
     # explode_outer for the same InferFiltersFromGenerate reason as in
     # winnow_fingerprints (sketch arrays are non-empty by construction)
     ex = sets.select(
-        "repo", "file_id", F.explode_outer("fingerprints").alias("fingerprint")
+        "repo", "file", F.explode_outer("fingerprints").alias("fingerprint")
     )
-    join_ex = ex
-    if max_df is not None:
-        dfreq = ex.groupBy("fingerprint").agg(F.count("*").alias("_df"))
-        join_ex = ex.join(
-            F.broadcast(dfreq.filter(F.col("_df") > max_df).select("fingerprint")),
-            on="fingerprint",
-            how="left_anti",
-        )
-    a_cols = [F.col("file_id").alias("file_a"), "fingerprint"]
-    b_cols = [F.col("file_id").alias("file_b"), F.col("fingerprint").alias("_fpb")]
-    if within_repo:
-        a_cols.append(F.col("repo").alias("_ra"))
-        b_cols.append(F.col("repo").alias("_rb"))
-    a = join_ex.select(*a_cols)
-    b = join_ex.select(*b_cols)
-    cond = [a["fingerprint"] == b["_fpb"], a["file_a"] < b["file_b"]]
-    if within_repo:
-        cond.append(a["_ra"] == b["_rb"])
-    inter = (
-        a.join(b, on=cond)
-        .groupBy("file_a", "file_b")
-        .agg(F.count("*").cast("bigint").alias("n_inter"))
-    )
-    sa = sets.select(F.col("file_id").alias("file_a"), F.col("n_fp").alias("_na"))
-    sb = sets.select(F.col("file_id").alias("file_b"), F.col("n_fp").alias("_nb"))
-    return (
-        inter.join(sa, "file_a")
-        .join(sb, "file_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("_na") + F.col("_nb") - F.col("n_inter")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("file_a", "file_b", "jaccard")
+    # document frequency is corpus-wide even when the join is repo-scoped,
+    # so the guard runs here on the fingerprint alone, not on the join key
+    ex = drop_hot_blocks(ex, ["fingerprint"], max_df)
+    keys = ["repo", "fingerprint"] if within_repo else ["fingerprint"]
+    return jaccard_pairs(ex, "file", keys, sets.select("file", "n_fp")).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -255,29 +230,18 @@ def winnow_lsh_pairs(
     raw fingerprint join is Σ df(fp)² and corpus-hot boilerplate makes df
     unbounded, while banding bounds join fan-out to Σ bucket² with bucket
     sizes concentrated near true duplicate-family sizes.  ``max_bucket``
-    guards template families exactly like ``lsh_candidate_pairs``
-    (functions/dedup.py): over-limit buckets are dropped from the join —
-    at 10^12 files those families are handled by the O(n) keep-decision
-    path, not pair enumeration.
+    guards template families: it is the ``cap`` of
+    :func:`~rdfshape_api_spark.functions.dedup.blocked_pairs`, so
+    over-limit buckets are dropped from the join — at 10^12 files those
+    families are handled by the O(n) keep-decision path, not pair
+    enumeration.
     """
-    file_id = F.concat_ws(":", F.col("repo"), F.col("path")).alias("file_id")
+    file_id = F.concat_ws(":", F.col("repo"), F.col("path")).alias("file")
     sets = winnow_fingerprint_sets(docs, k=k, w=w, content_col=content_col)
     sets = sets.select(file_id, "fingerprints")
-    b = winnow_minhash_bands(sets, num_hashes=num_hashes, bands=bands)
-    if max_bucket is not None:
-        stats = b.groupBy("band", "band_key").agg(F.count("*").alias("_bn"))
-        b = b.join(
-            F.broadcast(
-                stats.filter(F.col("_bn") > max_bucket).select("band", "band_key")
-            ),
-            on=["band", "band_key"],
-            how="left_anti",
-        )
-    a = b.select(F.col("file_id").alias("file_a"), "band", "band_key")
-    bb = b.select(F.col("file_id").alias("file_b"), "band", "band_key")
+    b = winnow_minhash_bands(sets, num_hashes=num_hashes, bands=bands, id_col="file")
     return (
-        a.join(bb, on=["band", "band_key"])
-        .filter(F.col("file_a") < F.col("file_b"))
+        blocked_pairs(b, "file", ["band", "band_key"], cap=max_bucket)
         .select("file_a", "file_b")
         .distinct()
     )

@@ -15,6 +15,10 @@ Five strategies, each a scale-conscious Spark plan:
 * **n-gram Jaccard** — word-bigram shingles, explode → pair-count →
   exact Jaccard; candidate pruning by shared-shingle join.
 * **embedding cosine near-dup** — see functions/similarity.py.
+
+Every pair generator in the package (here, codeops, similarity and the
+entity-resolution blocking in operators/canonicalize.py) is one
+:func:`blocked_pairs` self-join with its optional hot-block ``cap``.
 """
 
 from __future__ import annotations
@@ -30,6 +34,83 @@ BAND_ROWS = 4  # 4 bands × 4 rows
 def words(text=None):
     text = F.col("text") if text is None else text
     return F.array_distinct(F.split(F.lower(F.trim(text)), r"\s+"))
+
+
+def drop_hot_blocks(rows: DataFrame, keys, cap: int | None) -> DataFrame:
+    """``rows`` minus every block (rows sharing all ``keys`` values) of
+    more than ``cap`` rows; ``cap=None`` returns ``rows`` unchanged.  The
+    hot-key list is tiny by construction, so it is the broadcast side of
+    a ``left_anti`` join and the rows never shuffle against it."""
+    if cap is None:
+        return rows
+    keys = list(keys)
+    hot = (
+        rows.groupBy(*keys).agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") > cap)
+        .select(*keys)
+    )
+    return rows.join(F.broadcast(hot), on=keys, how="left_anti")
+
+
+def blocked_pairs(
+    rows: DataFrame,
+    id_col: str,
+    keys,
+    cap: int | None = None,
+    carry=(),
+    symmetric: bool = False,
+) -> DataFrame:
+    """The blocked self-join under every similarity and entity-resolution
+    pair generator: one row per pair of ``rows`` that agree on every
+    ``keys`` value — ``(*keys, <id_col>_a, <id_col>_b, <carry>_a…,
+    <carry>_b…)`` with ``id_a < id_b``, or ``id_a != id_b`` (both orders)
+    when ``symmetric``.  The block key is the equi-join key, so candidate
+    work is Σ|block|², never n².  Pairs are not de-duplicated: two rows
+    sharing k blocks meet k times (callers ``distinct`` or count them).
+
+    ``cap`` is the hot-block guard: a block of b rows emits O(b²) pairs,
+    and hot blocks (stop-word shingles, template families, a dense cell)
+    reach b ≈ corpus size.  With ``cap`` set, blocks of more than ``cap``
+    rows are removed from the join (inclusive: a block of exactly ``cap``
+    rows still pairs) by :func:`drop_hot_blocks`; their members are the
+    caller's to resolve without pair enumeration (exact dedup, a finer
+    key, a dense-family rule).  ``cap=None`` keeps exact pair semantics —
+    the oracle contract, and every public guard's default.
+    """
+    keys = list(keys)
+    rows = drop_hot_blocks(rows, keys, cap)
+    cols = [id_col, *carry]
+    a = rows.select(*keys, *[F.col(c).alias(f"{c}_a") for c in cols])
+    b = rows.select(*keys, *[F.col(c).alias(f"{c}_b") for c in cols])
+    ia, ib = F.col(f"{id_col}_a"), F.col(f"{id_col}_b")
+    return a.join(b, on=keys).filter(ia != ib if symmetric else ia < ib)
+
+
+def jaccard_pairs(
+    elems: DataFrame, id_col: str, keys, sizes: DataFrame, cap: int | None = None
+) -> DataFrame:
+    """Exact set Jaccard |A∩B| / (|A|+|B|−|A∩B|), rounded to 4 places,
+    for every pair of sets sharing ≥ 1 element: ``(<id_col>_a,
+    <id_col>_b, jaccard)``, id_a < id_b, unfiltered.
+
+    ``elems`` holds one row per (set, element), the element spelled by
+    ``keys``; ``sizes`` is ``(id_col, set size)``.  The intersection is a
+    :func:`blocked_pairs` count (partial-aggregated: shuffle ∝ shared
+    elements, not sets²).  ``cap`` guards the join side only — ``sizes``
+    keep every element, so Jaccard loses just the hot elements'
+    intersection mass."""
+    a, b = f"{id_col}_a", f"{id_col}_b"
+    inter = (
+        blocked_pairs(elems, id_col, keys, cap=cap)
+        .groupBy(a, b)
+        .agg(F.count("*").cast("bigint").alias("_inter"))
+    )
+    n = F.col("_inter")
+    return (
+        inter.join(sizes.toDF(a, "_na"), a)
+        .join(sizes.toDF(b, "_nb"), b)
+        .select(a, b, F.round(n / (F.col("_na") + F.col("_nb") - n), 4).alias("jaccard"))
+    )
 
 
 def exact_duplicates(docs: DataFrame, fp=None) -> DataFrame:
@@ -89,13 +170,12 @@ def lsh_candidate_pairs(docs: DataFrame, max_bucket: int | None = None) -> DataF
     meet; a degenerate hot bucket (e.g. many empty docs) is exactly the
     AQE-skew-join case, and the bucket key is already salted by band index.
 
-    ``max_bucket`` is the 100TB-corpus guard: a bucket of b docs emits
-    O(b²) pairs, and near-identical template families (very common in web
-    corpora) produce buckets of 10⁵+ — pass e.g. ``max_bucket=1000`` to
-    exclude those buckets here and handle their members with
-    :func:`exact_duplicates` / :func:`lsh_dedup_groups` instead (a giant
-    bucket IS a duplicate family; enumerating its pairs is pointless).
-    Default None keeps exact pair semantics (the oracle contract).
+    ``max_bucket`` is the :func:`blocked_pairs` ``cap`` over band buckets:
+    near-identical template families (very common in web corpora) produce
+    buckets of 10⁵+ — pass e.g. ``max_bucket=1000`` to exclude those
+    buckets here and handle their members with :func:`exact_duplicates` /
+    :func:`lsh_dedup_keep` instead (a giant bucket IS a duplicate family;
+    enumerating its pairs is pointless).
     """
     # materialize the band table once: the self-join (and the max_bucket
     # count) would otherwise recompute the whole shingle→minhash pipeline
@@ -103,21 +183,9 @@ def lsh_candidate_pairs(docs: DataFrame, max_bucket: int | None = None) -> DataF
     # 100 TB this IS the design — the band table is written once at ingest
     # (see lsh_incremental_keep) and every consumer reads the materialized
     # form; locally, localCheckpoint is the single-job equivalent.
-    b = minhash_bands(docs).localCheckpoint()
-    if max_bucket is not None:
-        counts = b.groupBy("band", "band_key").agg(F.count("*").alias("_bn"))
-        b = (
-            b.join(F.broadcast(counts.filter(F.col("_bn") > max_bucket)),
-                   on=["band", "band_key"], how="left_anti")
-        )
-    left = b.select(F.col("band").alias("lband"), F.col("band_key").alias("lkey"), F.col("doc_id").alias("doc_a"))
-    right = b.select(F.col("band").alias("rband"), F.col("band_key").alias("rkey"), F.col("doc_id").alias("doc_b"))
+    b = minhash_bands(docs).localCheckpoint().withColumnRenamed("doc_id", "doc")
     return (
-        left.join(
-            right,
-            on=[left["lband"] == right["rband"], left["lkey"] == right["rkey"],
-                left["doc_a"] < right["doc_b"]],
-        )
+        blocked_pairs(b, "doc", ["band", "band_key"], cap=max_bucket)
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -361,44 +429,18 @@ def ngram_jaccard_pairs(
     |A∩B| / (|A|+|B|−|A∩B|). Partial aggregation makes the pair-count
     shuffle proportional to shared shingles, not documents².
 
-    ``max_df`` is the 100TB hot-shingle guard (same role as
-    ``max_bucket`` in :func:`lsh_candidate_pairs`): a shingle shared by b
-    docs emits O(b²) join rows, and stop-word bigrams in a web corpus hit
-    b ≈ corpus size.  With ``max_df`` set, shingles whose document
-    frequency exceeds the cap are dropped from the JOIN side only —
-    |A|/|B| sizes keep every shingle, so Jaccard estimates only lose the
-    (uninformative) hot shingles' intersection contribution and the
-    output stays bounded.  Default None keeps exact semantics (the
-    oracle contract).
+    ``max_df`` is the hot-shingle guard, the :func:`blocked_pairs`
+    ``cap`` over shingle blocks: stop-word bigrams in a web corpus are
+    shared by b ≈ corpus size docs.  Hot shingles leave the JOIN side
+    only (:func:`jaccard_pairs`) — |A|/|B| sizes keep every shingle, so
+    Jaccard estimates only lose the (uninformative) hot shingles'
+    intersection contribution and the output stays bounded.
     """
-    sh = docs.select("doc_id", F.explode(ngram_shingles()).alias("shingle"))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n_sh"))
-    join_sh = sh
-    if max_df is not None:
-        dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        join_sh = sh.join(
-            F.broadcast(dfreq.filter(F.col("_df") > max_df).select("shingle")),
-            on="shingle",
-            how="left_anti",
-        )
-    a = join_sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    bb = join_sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle").alias("shingle_b"))
-    inter = (
-        a.join(bb, on=[a["shingle"] == bb["shingle_b"], a["doc_a"] < bb["doc_b"]])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("bigint").alias("n_inter"))
+    sh = docs.select(F.col("doc_id").alias("doc"), F.explode(ngram_shingles()).alias("shingle"))
+    sizes = sh.groupBy("doc").agg(F.count("*").cast("bigint"))
+    return jaccard_pairs(sh, "doc", ["shingle"], sizes, cap=max_df).filter(
+        F.col("jaccard") >= threshold
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    j = (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return j.select("doc_a", "doc_b", "jaccard")
 
 
 def decontaminate(
@@ -580,14 +622,8 @@ def simhash_bucket_pairs(docs: DataFrame, band_bits: int = 16) -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.band_val")
-    l = bands.select(F.col("band").alias("lb"), F.col("band_val").alias("lv"), F.col("doc_id").alias("doc_a"))
-    r = bands.select(F.col("band").alias("rb"), F.col("band_val").alias("rv"), F.col("doc_id").alias("doc_b"))
-    return (
-        l.join(r, on=[l["lb"] == r["rb"], l["lv"] == r["rv"], l["doc_a"] < r["doc_b"]])
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    ).select(F.col("doc_id").alias("doc"), "bk.band", "bk.band_val")
+    return blocked_pairs(bands, "doc", ["band", "band_val"]).select("doc_a", "doc_b").distinct()
 
 
 def bloom_positions(key, k: int = 5, m: int = 1 << 20, salt: str = "bloom"):

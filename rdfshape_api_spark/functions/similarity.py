@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from rdfshape_api_spark.functions.dedup import blocked_pairs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -70,32 +72,17 @@ def embedding_near_dups(
     """IVF-style near-dup pairs: cosine ≥ threshold within a coarse cell
     (``label``). Output (vec_a, vec_b, cos_sim rounded 4).
 
-    ``max_cell`` is the corpus-scale guard (same contract as
-    ``dedup.lsh_candidate_pairs(max_bucket=…)``): a cell of b vectors
-    emits O(b²) pairs, and with a FIXED number of cells Σ|cell|² grows
-    quadratically in corpus size.  Cells larger than ``max_cell`` are
-    excluded from the pair join — at scale their members should be routed
-    through a finer quantizer (k-means cells sized to N, see
-    :func:`ivf_ann_topk`) or treated as one dense family.  Default None
-    keeps exact within-cell pair semantics (the oracle contract)."""
-    cells = emb.select(
-        F.col("label").alias("la"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-    )
-    if max_cell is not None:
-        counts = emb.groupBy(F.col("label").alias("la")).agg(F.count("*").alias("_cn"))
-        cells = cells.join(
-            F.broadcast(counts.filter(F.col("_cn") > max_cell)),
-            on="la",
-            how="left_anti",
-        )
-    b = cells.select(
-        F.col("la").alias("lb"), F.col("vec_a").alias("vec_b"), F.col("ea").alias("eb")
-    )
-    pairs = cells.join(b, on=[cells["la"] == b["lb"], cells["vec_a"] < b["vec_b"]])
+    ``max_cell`` is the corpus-scale guard, the
+    :func:`~rdfshape_api_spark.functions.dedup.blocked_pairs` ``cap`` over
+    cells: with a FIXED number of cells Σ|cell|² grows quadratically in
+    corpus size.  Cells larger than ``max_cell`` are excluded from the
+    pair join — at scale their members should be routed through a finer
+    quantizer (k-means cells sized to N, see :func:`ivf_ann_topk`) or
+    treated as one dense family."""
+    cells = emb.select("label", F.col("vec_id").alias("vec"), "embedding")
     return (
-        pairs.withColumn("cos_sim", F.round(cosine(F.col("ea"), F.col("eb")), 4))
+        blocked_pairs(cells, "vec", ["label"], cap=max_cell, carry=["embedding"])
+        .withColumn("cos_sim", F.round(cosine(F.col("embedding_a"), F.col("embedding_b")), 4))
         .filter(F.col("cos_sim") >= threshold)
         .select("vec_a", "vec_b", "cos_sim")
     )
@@ -273,19 +260,23 @@ def semantic_dedup(
     default ``max_bucket=None`` that sum is bounded only by ``n_planes``
     (2^n_planes buckets) — fine at fixture scale, quadratic at corpus
     scale if n_planes stays fixed while N grows.  ``max_bucket`` is the
-    100 TB guard (same contract as ``dedup.lsh_candidate_pairs``):
-    buckets larger than the cap skip pair scoring entirely and fall
-    through to the O(b) dense-family rule — a bucket that big under a
-    coarse hash IS a near-identical family, so every member except the
-    min-id is dropped and ``n_near_dups`` = bucket size − 1.  Per-bucket
-    pair work is then ≤ max_bucket² by construction (asserted by a
-    property test); pick the cap from the cell budget, e.g.
-    max_bucket ≈ c·N/2^n_planes.  The keep rule is a single
-    map-side-combinable agg over the pair list (no iteration, unlike
-    connected-components dedup — the paper's semantics are per-cluster,
-    not transitive). The final join back to the vector set is on
-    ``vec_id`` — broadcast-able when the near-dup set is small, shuffle
-    hash join otherwise.
+    100 TB guard, with the inclusive cap rule of
+    :func:`~rdfshape_api_spark.functions.dedup.blocked_pairs` (a bucket
+    of exactly ``max_bucket`` vectors is still pair-scored): larger
+    buckets skip pair scoring entirely and fall through to the O(b)
+    dense-family rule, which drops every member except the min-id with
+    NO similarity check and sets ``n_near_dups`` = bucket size − 1.  That
+    rule assumes the blocking hash is fine enough that an over-cap bucket
+    is a true near-duplicate family; over a diverse corpus with too few
+    planes (or cells) it drops distinct vectors, so size the blocking so
+    that over-cap buckets are rare.  Per-bucket pair work is then
+    ≤ max_bucket² by construction (asserted by a property test); pick
+    the cap from the cell budget, e.g. max_bucket ≈ c·N/2^n_planes.  The
+    keep rule is a single map-side-combinable agg over the pair list (no
+    iteration, unlike connected-components dedup — the paper's semantics
+    are per-cluster, not transitive). The final join back to the vector
+    set is on ``vec_id`` — broadcast-able when the near-dup set is small,
+    shuffle hash join otherwise.
     """
     hashed = emb.select("vec_id", "embedding").withColumn(
         "bucket", rp_bucket(F.col("embedding"), n_planes)
@@ -298,7 +289,9 @@ def _semantic_dedup_blocked(
 ) -> DataFrame:
     """Shared SemDeDup core over any (vec_id, embedding, bucket) blocking:
     within-bucket pair scoring + keep-the-min, with the optional over-cap
-    dense-family fall-through."""
+    dense-family fall-through.  The over-cap buckets are counted here, not
+    by the ``blocked_pairs`` cap, because the fall-through needs their
+    sizes and min ids."""
     dense_stats = None
     if max_bucket is not None:
         # one extra hash-agg over the bucket table; over-cap buckets are
@@ -314,16 +307,10 @@ def _semantic_dedup_blocked(
             (F.col("vec_id") > F.col("_bmin")).cast("int").alias("_smaller"),
         )
         hashed = hashed.join(over.select("bucket"), on="bucket", how="left_anti")
-    a = hashed.select(
-        F.col("bucket").alias("ba"), F.col("vec_id").alias("va"), F.col("embedding").alias("ea")
-    )
-    b = hashed.select(
-        F.col("bucket").alias("bb"), F.col("vec_id").alias("vb"), F.col("embedding").alias("eb")
-    )
     pairs = (
-        a.join(b, on=[F.col("ba") == F.col("bb"), F.col("va") != F.col("vb")])
-        .filter(F.round(cosine(F.col("ea"), F.col("eb")), 4) >= threshold)
-        .select("va", "vb")
+        blocked_pairs(hashed, "vec_id", ["bucket"], carry=["embedding"], symmetric=True)
+        .filter(F.round(cosine(F.col("embedding_a"), F.col("embedding_b")), 4) >= threshold)
+        .select(F.col("vec_id_a").alias("va"), F.col("vec_id_b").alias("vb"))
     )
     stats = pairs.groupBy("va").agg(
         F.count("*").cast("bigint").alias("n_near_dups"),

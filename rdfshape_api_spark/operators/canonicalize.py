@@ -248,13 +248,17 @@ def propose_label_edges(
     Plan shape: labels normalize to distinct token arrays (map-only);
     blocking emits one row per (token) — candidate pairs only form inside
     a token block, and blocks hotter than ``max_block`` are dropped
-    whole (a stopword-like token pairs the entire corpus; real matches
-    still meet in their RARE tokens, which is the standard
-    blocking-key argument).  Survivors get exact Jaccard via
-    ``array_intersect``/``array_union`` — JVM columnar, no UDF.
+    whole (the ``cap`` of
+    :func:`~rdfshape_api_spark.functions.dedup.blocked_pairs`: a
+    stopword-like token pairs the entire corpus; real matches still meet
+    in their RARE tokens, which is the standard blocking-key argument).
+    Survivors get exact Jaccard via ``array_intersect``/``array_union`` —
+    JVM columnar, no UDF.
 
     Returns ``(a, b, jaccard)``, ``a < b``, Jaccard ≥ ``threshold``.
     """
+    from rdfshape_api_spark.functions.dedup import blocked_pairs
+
     toks = F.array_distinct(
         F.filter(
             F.split(F.regexp_replace(F.lower(F.col("obj_value")), "[^a-z0-9]+", " "), " "),
@@ -268,17 +272,9 @@ def propose_label_edges(
         .distinct()
     )
     blocks = profiles.select("entity", F.explode("toks").alias("tok"))
-    hot = blocks.groupBy("tok").agg(F.count("*").alias("_n")).filter(
-        F.col("_n") > max_block
-    )
-    blocks = blocks.join(F.broadcast(hot), on="tok", how="left_anti")
     pairs = (
-        blocks.alias("l")
-        .join(
-            blocks.alias("r"),
-            on=[F.col("l.tok") == F.col("r.tok"), F.col("l.entity") < F.col("r.entity")],
-        )
-        .select(F.col("l.entity").alias("a"), F.col("r.entity").alias("b"))
+        blocked_pairs(blocks, "entity", ["tok"], cap=max_block)
+        .select(F.col("entity_a").alias("a"), F.col("entity_b").alias("b"))
         .distinct()
     )
     pa = profiles.select(F.col("entity").alias("a"), F.col("toks").alias("_ta"))

@@ -585,6 +585,10 @@ class _JsonLdParser:
                 else:
                     lex_s, dt = str(lex), None
                 lang = v.get("@language")
+                if lang and ("@type" in v or not isinstance(lex, str)):
+                    # JSON-LD 1.1 expansion error: only a string @value
+                    # may carry a language, and never together with @type
+                    raise ValueError(f"invalid language-tagged value: {v!r}")
                 if "@type" in v:
                     dt = self.expand(v["@type"], ctx) or v["@type"]
                 self.triples.append(
@@ -720,6 +724,10 @@ def parse_rdfjson(content: str) -> list[Triple]:
                     triples.append((subj, pred, "bnode", v, None, None))
                 elif t == "literal":
                     lang = o.get("lang")
+                    if lang and o.get("datatype"):
+                        raise ValueError(
+                            f"RDF/JSON literal has both lang and datatype: {o!r}"
+                        )
                     triples.append(
                         (subj, pred, "literal", v,
                          lang.lower() if lang else None, o.get("datatype"))
@@ -862,8 +870,10 @@ def parse_rdfxml(content: str) -> list[Triple]:
                 kind = "bnode" if obj.startswith("_:") else "iri"
                 obj_term = (kind, obj, None, None)
             else:
+                # rdf:datatype overrides xml:lang (RDF/XML §7.2.16)
                 obj_term = (
-                    "literal", prop.text or "", lang.lower() if lang else None, dt
+                    "literal", prop.text or "",
+                    lang.lower() if lang and dt is None else None, dt,
                 )
             triples.append((subj, pred, *obj_term))
             rid = prop.get(f"{{{_RDF_NS}}}ID")

@@ -109,6 +109,23 @@ def test_clone_pairs_cross_repo_and_max_df(docs):
     assert winnow_near_dup_pairs(docs, threshold=0.1, max_df=1).count() == 0
 
 
+def test_clone_pairs_within_repo_max_df_counts_corpus_wide(spark):
+    """With ``within_repo`` the join is scoped to a repo, but ``max_df``
+    still counts files per fingerprint over the whole corpus: a
+    fingerprint in 2 files of each of 2 repos (df 4) is hot at
+    ``max_df=3`` even though each repo block holds only 2 files."""
+    body = "def add(a, b):\n    return a + b\n"
+    docs = spark.createDataFrame(
+        [(r, p, "c", "python", body) for r in ("r1", "r2") for p in ("a.py", "b.py")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    assert {
+        (r.file_a, r.file_b)
+        for r in winnow_near_dup_pairs(docs, within_repo=True, max_df=4).collect()
+    } == {("r1:a.py", "r1:b.py"), ("r2:a.py", "r2:b.py")}
+    assert winnow_near_dup_pairs(docs, within_repo=True, max_df=3).count() == 0
+
+
 def test_repo_stats(docs):
     got = {r.repo: r for r in repo_stats(docs).collect()}
     assert got["r1"].n_files == 3

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdfshape_api_spark.functions.dedup import (
+    blocked_pairs,
     lsh_candidate_pairs,
     lsh_dedup_keep,
 )
@@ -259,3 +260,43 @@ def test_lsh_incremental_keep_batch_vs_corpus(spark):
     assert out[101]["keep"] and out[101]["dup_of"] is None
     assert not out[102]["keep"] and out[102]["dup_of"] == 101
     assert out[103]["keep"] and out[103]["dup_of"] is None
+
+
+@pytest.fixture(scope="module")
+def blocks(spark):
+    # blocks of size 1 (x), 2 (y) and 3 (z); v is a carried payload
+    rows = [("x", 1), ("y", 2), ("y", 3), ("z", 4), ("z", 5), ("z", 6)]
+    return spark.createDataFrame(
+        [(k, i, f"v{i}") for k, i in rows], "blk string, id long, v string"
+    )
+
+
+def _id_pairs(df):
+    return sorted((r["id_a"], r["id_b"]) for r in df.collect())
+
+
+def test_blocked_pairs_cap_is_inclusive(blocks):
+    # cap=2 drops only the 3-row block; the 2-row block still pairs
+    assert _id_pairs(blocked_pairs(blocks, "id", ["blk"], cap=2)) == [(2, 3)]
+
+
+def test_blocked_pairs_uncapped_is_every_in_block_pair(blocks):
+    assert _id_pairs(blocked_pairs(blocks, "id", ["blk"])) == [
+        (2, 3), (4, 5), (4, 6), (5, 6),
+    ]
+
+
+def test_blocked_pairs_symmetric_emits_both_orders(blocks):
+    one_way = [(2, 3), (4, 5), (4, 6), (5, 6)]
+    assert _id_pairs(blocked_pairs(blocks, "id", ["blk"], symmetric=True)) == sorted(
+        one_way + [(b, a) for a, b in one_way]
+    )
+
+
+def test_blocked_pairs_carry_suffixes(blocks):
+    out = blocked_pairs(blocks, "id", ["blk"], cap=2, carry=["v"])
+    assert set(out.columns) == {"blk", "id_a", "id_b", "v_a", "v_b"}
+    assert [tuple(r) for r in out.select("blk", "id_a", "id_b", "v_a", "v_b").collect()] == [
+        ("y", 2, 3, "v2", "v3")
+    ]
+

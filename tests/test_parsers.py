@@ -338,3 +338,39 @@ def test_rdfxml_property_reification():
     assert (stmt, RDFNS + "subject", "iri", "http://e/a", None, None) in t
     assert (stmt, RDFNS + "predicate", "iri", "http://e/says", None, None) in t
     assert (stmt, RDFNS + "object", "literal", "hello", None, None) in t
+
+
+def test_literal_lang_and_datatype_are_exclusive():
+    """No parser emits a literal with both ``obj_lang`` and
+    ``obj_datatype``; each format resolves the clash by its own spec."""
+    s, p = "http://e/s", "http://e/p"
+    # JSON-LD: a language on a non-string @value, or next to @type, is an
+    # invalid language-tagged value -> the document becomes an error row
+    for obj in ('{"@value": 5, "@language": "en"}',
+                '{"@value": true, "@language": "en"}',
+                '{"@value": "5", "@type": "http://e/T", "@language": "en"}'):
+        triples, err = parsers.parse_document(f'{{"@id": "{s}", "{p}": {obj}}}', "jsonld")
+        assert triples == [] and "invalid language-tagged value" in err, obj
+    triples, err = parsers.parse_document(
+        f'{{"@id": "{s}", "{p}": {{"@value": "hi", "@language": "EN"}}}}', "jsonld"
+    )
+    assert err is None and triples == [(s, p, "literal", "hi", "en", None)]
+    # RDF/XML: rdf:datatype overrides xml:lang
+    xml = (
+        f'<rdf:RDF xmlns:rdf="{RDF}" xmlns:ex="http://e/">'
+        f'<rdf:Description rdf:about="{s}">'
+        f'<ex:p xml:lang="en" rdf:datatype="{XSD}integer">5</ex:p>'
+        f'<ex:q xml:lang="EN">hi</ex:q>'
+        "</rdf:Description></rdf:RDF>"
+    )
+    triples, err = parsers.parse_document(xml, "rdfxml")
+    assert err is None
+    assert sorted(t[2:] for t in triples) == [
+        ("literal", "5", None, XSD + "integer"),
+        ("literal", "hi", "en", None),
+    ]
+    # RDF/JSON: lang plus datatype is malformed
+    rj = (f'{{"{s}": {{"{p}": [{{"type": "literal", "value": "5", '
+          f'"lang": "en", "datatype": "{XSD}integer"}}]}}}}')
+    triples, err = parsers.parse_document(rj, "rdfjson")
+    assert triples == [] and "lang and datatype" in err

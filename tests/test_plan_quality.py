@@ -7,6 +7,8 @@ codegen fails here even though results stay right.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -338,3 +340,86 @@ def test_w3c_batch_simple_jobs_share_one_aggregate(spark):
     # aggregation of the BIG scan would add 2 more per job (>= 8 here)
     assert plan.count("HashAggregate") <= 6
     assert "CartesianProduct" not in plan
+
+
+def _text_docs(spark):
+    return spark.createDataFrame(
+        [(i, f"shared words in every doc number {i % 3}") for i in range(8)],
+        "doc_id long, text string",
+    )
+
+
+def _code_docs(spark):
+    return spark.createDataFrame(
+        [(f"r{i % 2}", f"f{i}.py", "c", "python", f"def f(a):\n    return a + {i % 3}\n")
+         for i in range(6)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+
+
+def _emb(spark):
+    return spark.createDataFrame(
+        [(i, [1.0, float(i % 3) / 10, 0.0], i % 2) for i in range(8)],
+        "vec_id long, embedding array<float>, label int",
+    )
+
+
+def _label_triples(spark):
+    return spark.createDataFrame(
+        [("d", f"http://e/{i}", "http://e/label", "literal", f"acme corp {i % 3}", None, None)
+         for i in range(8)],
+        "doc_sha256 string, subj string, pred string, obj_kind string, "
+        "obj_value string, obj_lang string, obj_datatype string",
+    )
+
+
+def _site(module, name, make_input, *args):
+    def build(spark, **kw):
+        import importlib
+
+        fn = getattr(importlib.import_module(f"rdfshape_api_spark.{module}"), name)
+        return fn(make_input(spark), *args, **kw)
+
+    return build
+
+
+# (site, guard parameter or None, builder) — every blocked self-join site
+BLOCKED_PAIR_SITES = [
+    ("lsh_candidate_pairs", "max_bucket",
+     _site("functions.dedup", "lsh_candidate_pairs", _text_docs)),
+    ("winnow_lsh_pairs", "max_bucket",
+     _site("functions.codeops", "winnow_lsh_pairs", _code_docs)),
+    ("simhash_bucket_pairs", None,
+     _site("functions.dedup", "simhash_bucket_pairs", _text_docs)),
+    ("ngram_jaccard_pairs", "max_df",
+     _site("functions.dedup", "ngram_jaccard_pairs", _text_docs)),
+    ("winnow_near_dup_pairs", "max_df",
+     _site("functions.codeops", "winnow_near_dup_pairs", _code_docs)),
+    ("embedding_near_dups", "max_cell",
+     _site("functions.similarity", "embedding_near_dups", _emb)),
+    ("semantic_dedup", "max_bucket",
+     _site("functions.similarity", "semantic_dedup", _emb)),
+    ("propose_label_edges", "max_block",
+     _site("operators.canonicalize", "propose_label_edges", _label_triples,
+           "http://e/label")),
+]
+
+
+@pytest.mark.parametrize(
+    "guard, build",
+    [(g, b) for _, g, b in BLOCKED_PAIR_SITES],
+    ids=[s for s, _, _ in BLOCKED_PAIR_SITES],
+)
+def test_blocked_pair_sites_join_on_the_block_key(spark, guard, build):
+    """Every blocked-pair site keeps its block key as an equi-join key on
+    its default call path (no cartesian or nested-loop pair join), and a
+    set guard removes hot blocks through a broadcast anti-join."""
+    plans = {"default": _plan(build(spark))}
+    if guard is not None:
+        plans["capped"] = _plan(build(spark, **{guard: 2}))
+    for plan in plans.values():
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+    if guard is not None:
+        assert "BroadcastExchange" in plans["capped"]
+        assert re.search(r"BroadcastHashJoin[^\n]*LeftAnti", plans["capped"])
